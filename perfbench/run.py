@@ -182,7 +182,9 @@ def _layer_metrics(tracer, extra, n_passes, session_s, nproc, overhead):
     ):
         out[key] = per(c[key])
     for layer, seconds in tracer.self_times().items():
-        if layer != "engine":
+        # no spans: session start is engine.session_s, and Python kernels
+        # run inside executor tasks (functions.worker_s)
+        if layer not in ("engine", "functions"):
             out[f"{layer}.self_s"] = per(seconds)
     out.update({
         "mart.freshness_p50_s": 0.0, "mart.freshness_max_s": 0.0,
