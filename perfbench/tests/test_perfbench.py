@@ -17,17 +17,22 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
     SPEC = json.load(f)
-TINY = ["--seconds", "0", "--max-ops", "2", "--locations", "20"]
+# Two ops per read workload and 20-location ingest hours; --seconds 0
+# measures one pass.
+TINY = (
+    "from perfbench import workloads\n"
+    "workloads.WAREHOUSE_READ = workloads.WAREHOUSE_READ[:2]\n"
+    "workloads.CORPUS_PYTHON = workloads.CORPUS_PYTHON[:2]\n"
+    "workloads.MartIngest.LOCATIONS = 20\n"
+)
 
 
-def _run(workload: str, trace: int = 0, prelude: str | None = None):
-    args = ["--workload", workload, "--seed", "3", "--trace", str(trace), *TINY]
-    if prelude is None:
-        cmd = [sys.executable, "perfbench/run.py", *args]
-    else:
-        cmd = [sys.executable, "-c",
-               prelude + "\nfrom perfbench.run import main\n"
-               "raise SystemExit(main(__import__('sys').argv[1:]))", *args]
+def _run(workload: str, trace: int = 0, prelude: str = ""):
+    args = ["--workload", workload, "--seed", "3", "--seconds", "0",
+            "--trace", str(trace)]
+    cmd = [sys.executable, "-c",
+           TINY + prelude + "from perfbench.run import main\n"
+           "raise SystemExit(main(__import__('sys').argv[1:]))", *args]
     p = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True,
                        timeout=600)
     assert p.returncode == 0, p.stderr[-3000:]

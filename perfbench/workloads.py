@@ -52,22 +52,51 @@ CORPUS_PYTHON = (
 )
 
 
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and all its descendants
+    (the JVM, Python workers), from /proc."""
+    parent, used = {}, {}
+    for pid in os.listdir("/proc"):
+        if not pid.isdigit():
+            continue
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:  # the process has just exited
+            continue
+        parent[int(pid)] = int(fields[1])
+        used[int(pid)] = sum(int(x) for x in fields[11:15])  # u/s + children
+    mine, me = 0, os.getpid()
+    for pid, ticks in used.items():
+        p = pid
+        while p not in (me, 0, 1) and p in parent:
+            p = parent[p]
+        if p == me:
+            mine += ticks
+    return mine / os.sysconf("SC_CLK_TCK")
+
+
 class Workload:
     """One workload inside one Spark session.
 
     ``stage`` prepares inputs and ``warm`` runs the untimed first pass
-    (both part of set-up); ``pass_ops`` lists the ops of one measured
-    pass. Each op records its latency and whether its result was right.
+    (both part of set-up); ``pass_ops`` lists the ops of one pass. Each
+    op records its latency, its CPU seconds and whether its result was
+    right.
     """
 
-    MIN_PASSES = 1  # measured untraced passes, however short --seconds is
+    # Nominal seconds of one warm pass on a 4-core host (corpus_python and
+    # mart_ingest both take 6 to 8 s): a run measures
+    # ceil(--seconds / PASS_S) passes, whatever the code's speed.
+    PASS_S = 7.0
 
     def __init__(self, ctx) -> None:
         self.ctx = ctx
         self.attempted = 0
         self.failed = 0
         self.errors: list[str] = []
-        self.log: list[tuple[str, float]] = []  # (op, latency) in run order
+        # (op, latency, CPU seconds) of every op that ran, in run order
+        self.log: list[tuple[str, float, float]] = []
 
     def _outcome(self, name: str, problems: list[str]) -> bool:
         self.attempted += 1
@@ -79,6 +108,7 @@ class Workload:
     def run_op(self, name: str, body) -> float | None:
         """Run one op; returns its latency, or None when it raised."""
         tr = self.ctx.tracer
+        cpu0 = tree_cpu_s()
         t0 = time.perf_counter()
         try:
             with tr.op(name):
@@ -87,8 +117,9 @@ class Workload:
         except Exception as e:  # noqa: BLE001 - an op failure is a result
             self._outcome(name, [f"{type(e).__name__}: {str(e)[:300]}"])
             return None
+        cpu = tree_cpu_s() - cpu0
         self._outcome(name, check())
-        self.log.append((name, latency))
+        self.log.append((name, latency, cpu))
         return latency
 
     def query(self, df_fn, name: str):
@@ -128,12 +159,9 @@ class Workload:
 class QueryWorkload(Workload):
     """A fixed list of declared queries from ``plans.registry``."""
 
-    # One pass is only 5 to 8 op samples, too few for a steady median.
-    MIN_PASSES = 2
-
     def __init__(self, ctx, names: tuple[str, ...]) -> None:
         super().__init__(ctx)
-        self.names = names[: ctx.max_ops] if ctx.max_ops else names
+        self.names = names
         self.sf_dir = os.path.join(ctx.work, "sf")
         self.fns = registry.get_queries()
         self.oracle = self._oracles(registry.get_oracles())
@@ -174,7 +202,7 @@ class QueryWorkload(Workload):
         for name in self.names:
             self._op(name)
 
-    def pass_ops(self, rng):
+    def pass_ops(self, rng, record: bool = True):
         order = list(self.names)
         rng.shuffle(order)
         return [(name, lambda name=name: self._op(name)) for name in order]
@@ -188,11 +216,11 @@ class MartIngest(Workload):
     MERGE them into the versioned mart, then read it back."""
 
     RETAIN = 3  # versions VACUUM keeps
-    MAX_HOURS = 16
+    LOCATIONS = 300  # per raw hour, about 1900 records
 
     def __init__(self, ctx) -> None:
         super().__init__(ctx)
-        self.gen = RawHours(ctx.seed, ctx.locations)
+        self.gen = RawHours(ctx.seed, self.LOCATIONS)
         self.landing = os.path.join(ctx.work, "landing")
         self.raw_zone = os.path.join(ctx.work, "raw")
         self.root = os.path.join(ctx.work, "mart")
@@ -200,7 +228,7 @@ class MartIngest(Workload):
         self.eng = None
         self.hour = 0
         self.landed: list[str] = []
-        self.raw_records: dict[int, int] = {}
+        self.raw_records = 0  # of the staged hour
         self.rows_at: dict[int, int] = {}  # version -> rows it holds
         self.freshness: list[float] = []
         self.fresh_records = 0
@@ -208,15 +236,16 @@ class MartIngest(Workload):
     def stage(self) -> None:
         os.makedirs(self.landing)
         os.makedirs(self.raw_zone)
-        for h in range(self.MAX_HOURS):
-            text, n = self.gen.hour_ndjson(h)
-            with open(self._staged(h), "w") as f:
-                f.write(text)
-            self.raw_records[h] = n
         self.eng = Engine(self.ctx.spark)
 
     def _staged(self, h: int) -> str:
         return os.path.join(self.landing, f"h{h:04d}.json")
+
+    def _generate(self, h: int) -> None:
+        """Write hour ``h``'s raw file to the landing directory (untimed)."""
+        text, self.raw_records = self.gen.hour_ndjson(h)
+        with open(self._staged(h), "w") as f:
+            f.write(text)
 
     def _land(self, h: int) -> str:
         """Atomic rename of the staged hour into the raw zone."""
@@ -241,6 +270,7 @@ class MartIngest(Workload):
 
     def warm(self) -> None:
         spark = self.ctx.spark
+        self._generate(0)
         d = self._land(0)
         write_snapshot(build_mart(read_ndjson(spark, d), self.cfg), self.root)
         self.rows_at[snapshot_versions(self.root)[-1]] = self._rows_through(0)
@@ -248,14 +278,14 @@ class MartIngest(Workload):
         for _name, op in self._hour_ops(record=False):
             op()
 
-    def pass_ops(self, rng):
-        if self.hour >= self.MAX_HOURS:
-            raise RuntimeError("mart_ingest ran out of staged hours")
-        return self._hour_ops(record=True)
+    def pass_ops(self, rng, record: bool = True):
+        """One hour's ops; ``record`` counts its ingest in freshness."""
+        return self._hour_ops(record)
 
     def _hour_ops(self, record: bool):
         h = self.hour
         self.hour += 1
+        self._generate(h)
         return [
             ("ingest", lambda: self._ingest(h, record)),
             ("analyst", lambda: self._analyst(h)),
@@ -294,7 +324,7 @@ class MartIngest(Workload):
         self._record_versions(before, h)
         if latency is not None and record and not tr.enabled:
             self.freshness.append(latency)
-            self.fresh_records += self.raw_records[h]
+            self.fresh_records += self.raw_records
         if tr.enabled:
             stats = last_cow_stats(self.root) or {}
             tr.count("versioned.files_written", stats.get("files_rewritten", 0))
@@ -372,10 +402,9 @@ class MartIngest(Workload):
             ),
             "versioned.versions_live": float(len(snapshot_versions(self.root))),
         }
-        if self.ctx.tracer.enabled:
-            copy = os.path.join(self.ctx.work, "compacted")
-            read_snapshot(spark, self.root).coalesce(1).write.parquet(copy)
-            out["mart.storage_amplification"] = _tree_bytes(self.root) / _tree_bytes(copy)
+        copy = os.path.join(self.ctx.work, "compacted")
+        read_snapshot(spark, self.root).coalesce(1).write.parquet(copy)
+        out["mart.storage_amplification"] = _tree_bytes(self.root) / _tree_bytes(copy)
         return out
 
 
