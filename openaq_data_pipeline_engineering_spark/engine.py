@@ -37,6 +37,15 @@ _RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # Arrow for pandas_udf / mapInPandas / toPandas exchange.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Let AQE coalesce the final shuffle of a PERSISTED plan. With the
+    # conf false, a cached plan keeps every spark.sql.shuffle.partitions
+    # partition, so writing the strict MERGE's persisted join
+    # (operators/sqlmerge.execute_merge) commits one small file per
+    # shuffle partition; true sizes the files by
+    # spark.sql.adaptive.advisoryPartitionSizeInBytes. That join is the
+    # package's only persist(); localCheckpoint is not a cached plan
+    # and is unaffected.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 # Scan-split sizing (r12 measure-first): Spark sizes splits as

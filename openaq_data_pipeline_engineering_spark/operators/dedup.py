@@ -51,11 +51,15 @@ def dedup_first(
     """
     if not tiebreaker:
         raise ValueError("dedup_first requires a deterministic tiebreaker")
+    packed: list[str] = []
     if total_tiebreaker and all(isinstance(c, str) for c in tiebreaker):
-        others = [
+        # Key columns stay out of the struct: they are constant within a
+        # group, so they never order it, and packing one would put it in
+        # the output twice (ambiguous reference in the final select).
+        packed = [c for c in tiebreaker if c not in keys] + [
             c for c in df.columns if c not in keys and c not in tiebreaker
         ]
-        packed = list(tiebreaker) + others
+    if packed:
         agg = df.groupBy(*keys).agg(
             F.min(F.struct(*packed)).alias("__first")
         )

@@ -53,7 +53,12 @@ def merge_into_mart(
     identity is unenforceable under the partition-pruned read, and a
     partition-less key with a non-total tiebreaker would silently make
     the surviving row partition-layout-dependent (the r12
-    ``incremental_mart_merge`` determinism bug).
+    ``incremental_mart_merge`` determinism bug). So a correction whose
+    partition columns moved (e.g. a fixed timestamp that shifts the
+    day) lands as a NEW row in its new partition and the stale row
+    survives in the old one, even when the batch touches both:
+    cross-partition corrections require an explicit delete of the
+    stale row.
     ``tiebreaker``: ordering; the FIRST row per key under this order
     survives — include a batch/extraction timestamp descending to make
     re-delivered corrections win.

@@ -462,6 +462,14 @@ def _curation_oracle() -> str:
     oracle=_curation_oracle(),
 )
 def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The language gate below is the CASE chain's first arm, which is
+    # `predicted == 'en'` only while 'en' leads the tie-break order. A
+    # raise, not an assert, which `python -O` would strip.
+    if LANG_ORDER[0] != "en":
+        raise RuntimeError(
+            "corpus_curation's language gate requires 'en' first in "
+            f"LANG_ORDER, got {LANG_ORDER!r}"
+        )
     docs = fan_out(load_table(spark, sf_dir, "documents"))
 
     # Project before the exchange (guide §2.3): the gate joins shuffle
@@ -480,8 +488,6 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # s_en >= greatest(s_es, s_de, s_fr) (NULL text: both forms yield
     # NULL → row dropped). Each marker score now appears ONCE in the
     # predicate, so inlining is harmless wherever the Filter lands.
-    # (first-arm equivalence requires 'en' to LEAD the tie-break order)
-    assert LANG_ORDER[0] == "en"
     sc = lang_scores("text")
     wc_d = whitespace_token_count("text").cast("double")
     gated = (

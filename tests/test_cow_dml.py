@@ -699,3 +699,82 @@ class TestCowCommitProtocol:
         assert read_snapshot(spark, root).agg(F.sum("score")).first()[
             0
         ] == total_before
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+class TestCowMergeSizing:
+    """A path-target MERGE commits files sized by AQE, not one per
+    shuffle partition, and pins its source only for the statement."""
+
+    _MERGE = (
+        "MERGE INTO '{root}' AS t USING {src} AS s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET score = s.score "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+
+    @pytest.fixture
+    def wide_shuffle(self, spark):
+        key = "spark.sql.shuffle.partitions"
+        original = spark.conf.get(key)
+        spark.conf.set(key, "32")
+        yield
+        spark.conf.set(key, original)
+
+    def test_commit_writes_aqe_sized_files(
+        self, spark, tmp_path, wide_shuffle
+    ):
+        root = _seed(spark, tmp_path, files=1)
+        spark.createDataFrame(
+            [(5, 500.0), (9999, 1.5)], "k long, score double"
+        ).createOrReplaceTempView("cow_sized_src")
+        before = _persistent_rdd_ids(spark)
+        m = Engine(spark).sql(
+            self._MERGE.format(root=root, src="cow_sized_src")
+        ).first()
+        assert (m["version"], m["n_rows"]) == (2, 401)
+        assert last_cow_stats(root)["files_rewritten"] <= 2
+        # neither the source pin nor the strict join cache outlives it
+        assert _persistent_rdd_ids(spark) - before == set()
+        latest = read_snapshot(spark, root)
+        assert latest.filter("k = 5").first()["score"] == 500.0
+
+    def test_ambiguous_source_raises_and_releases_its_pins(
+        self, spark, tmp_path, wide_shuffle
+    ):
+        from openaq_data_pipeline_engineering_spark.operators.sqlmerge import (
+            MergeError,
+        )
+
+        root = _seed(spark, tmp_path, files=1)
+        spark.createDataFrame(
+            [(5, 1.0), (5, 2.0)], "k long, score double"
+        ).createOrReplaceTempView("cow_sized_dup_src")
+        before = _persistent_rdd_ids(spark)
+        with pytest.raises(MergeError, match="multiple source rows"):
+            Engine(spark).sql(
+                self._MERGE.format(root=root, src="cow_sized_dup_src")
+            )
+        assert _persistent_rdd_ids(spark) - before == set()
+        assert snapshot_versions(root) == [1]
+
+    def test_caller_cached_source_stays_cached(
+        self, spark, tmp_path, wide_shuffle
+    ):
+        root = _seed(spark, tmp_path, files=1)
+        src = spark.createDataFrame(
+            [(7, 70.0), (8888, 2.5)], "k long, score double"
+        ).cache()
+        src.count()
+        src.createOrReplaceTempView("cow_sized_cached_src")
+        before = _persistent_rdd_ids(spark)
+        try:
+            Engine(spark).sql(
+                self._MERGE.format(root=root, src="cow_sized_cached_src")
+            )
+            assert spark.table("cow_sized_cached_src").storageLevel.useMemory
+            assert _persistent_rdd_ids(spark) - before == set()
+        finally:
+            src.unpersist()

@@ -6,6 +6,7 @@ refactor can't silently break it.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -57,3 +58,43 @@ def test_dedup_first_struct_min_removes_window_from_plan(spark):
     )
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
+
+
+def test_dedup_first_struct_min_key_in_tiebreaker(spark):
+    """A column in both ``keys`` and ``tiebreaker`` is constant within
+    a group: the struct-min path leaves it out of the packed struct and
+    returns the window path's rows, instead of selecting it twice."""
+    from openaq_data_pipeline_engineering_spark.operators.dedup import (
+        dedup_first,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 10, "x"), (1, 3, "y"), (2, 9, "w"), (None, 4, "n")],
+        "k int, id int, tag string",
+    )
+    keys, tb = ["k"], ["k", "id"]
+    fast = dedup_first(df, keys=keys, tiebreaker=tb, total_tiebreaker=True)
+    slow = dedup_first(df, keys=keys, tiebreaker=tb)
+    assert fast.columns == slow.columns == df.columns
+    key = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
+    assert sorted(map(tuple, fast.collect()), key=key) == sorted(
+        map(tuple, slow.collect()), key=key
+    )
+    plan = fast._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+
+
+def test_corpus_curation_rejects_reordered_lang_order(
+    spark, tmp_path, monkeypatch
+):
+    """The first-arm language gate is only `predicted == 'en'` while
+    'en' leads LANG_ORDER; a reordering must fail loudly, also under
+    ``python -O``, which strips a bare assert."""
+    from openaq_data_pipeline_engineering_spark.plans import queries_text
+
+    reordered = ["es", "en"] + [
+        x for x in queries_text.LANG_ORDER if x not in ("es", "en")
+    ]
+    monkeypatch.setattr(queries_text, "LANG_ORDER", reordered)
+    with pytest.raises(RuntimeError, match="LANG_ORDER"):
+        queries_text.corpus_curation(spark, str(tmp_path))
